@@ -20,7 +20,7 @@ DataFrame ops:
   small-star: for each node u, connect every smaller-or-equal neighbor
               (and u) to min(neighborhood ∪ {u}).
 
-Checkpointing: ``localCheckpoint`` each round cuts the lineage chain —
+Checkpointing: ``materialize`` each round cuts the lineage chain —
 without it, round k's plan contains all k self-joins and the optimizer
 re-plans an exponentially growing DAG (SURVEY.md §7.4 risk 3). On a real
 cluster use reliable ``checkpoint()`` with a checkpoint dir; local
@@ -34,11 +34,12 @@ count over the full edge set).
 from __future__ import annotations
 
 from pyspark.sql import DataFrame
+from pyspark.sql import functions as F
 
 from sifr_project_java_ontology_processing_spark.operators.materialize import (
-    materialize_once,
+    collect_if_small,
+    materialize,
 )
-from pyspark.sql import functions as F
 
 
 def _star_round(edges: DataFrame, large: bool) -> DataFrame:
@@ -93,12 +94,10 @@ def connected_components(
         .where(F.col("u") != F.col("v"))
         .distinct()
     )
-    cur = materialize_once(cur) if not reliable else cur.checkpoint(eager=True)
+    cur = materialize(cur) if not reliable else cur.checkpoint(eager=True)
 
-    n_edges = cur.count()
-    if n_edges == 0:
-        return cur.select(F.col("u").alias("iri"), F.col("v").alias("canonical_iri"))
-    if n_edges <= driver_threshold:
+    pairs = collect_if_small(cur, driver_threshold)
+    if pairs is not None:
         parent: dict = {}
 
         def find(x):
@@ -110,7 +109,7 @@ def connected_components(
                 parent[x], x = root, parent[x]
             return root
 
-        for row in cur.toLocalIterator():
+        for row in pairs:
             ra, rb = find(row["u"]), find(row["v"])
             if ra != rb:
                 parent[max(ra, rb)] = min(ra, rb)
@@ -132,7 +131,7 @@ def connected_components(
         after_large = _star_round(cur, large=True)
         after_small = _star_round(after_large, large=False)
         after_small = (
-            materialize_once(after_small)
+            materialize(after_small)
             if not reliable
             else after_small.checkpoint(eager=True)
         )

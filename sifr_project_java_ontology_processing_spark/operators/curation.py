@@ -39,7 +39,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from sifr_project_java_ontology_processing_spark.operators.materialize import (
-    materialize_once,
+    materialize,
 )
 from sifr_project_java_ontology_processing_spark.operators.textanalysis import (
     lang_pred_cols,
@@ -82,7 +82,7 @@ def curate_corpus(
     # one text scan: hash + features into a narrow materialized frame;
     # the keeper agg and the per-row side both read it (see module
     # docstring). coalesce keeps NULL-text docs in the decision frame.
-    narrow = materialize_once(
+    narrow = materialize(
         docs.select(
             F.col(id_col),
             F.md5(txt).alias("_th"),

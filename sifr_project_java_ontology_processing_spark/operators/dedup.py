@@ -33,7 +33,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from sifr_project_java_ontology_processing_spark.operators.materialize import (
-    materialize_once,
+    materialize,
 )
 
 
@@ -126,7 +126,7 @@ def ngram_jaccard_pairs(
     sh = _jaccard_filtered_shingles(
         docs, id_col, text_col, n, max_shingle_df
     )
-    sh = materialize_once(sh)
+    sh = materialize(sh)
     # sizes aggregates map-side (partial agg: the shuffle carries ~one
     # row per doc per partition). The explicit repartition on the join
     # key keeps the self-join shuffle single.
@@ -172,7 +172,7 @@ def jaccard_verify(
     # self-join. Candidate pairs are the SMALL intermediate by this
     # operator's construction (bounded by near-dup density), so one
     # eager materialization is strictly cheaper than three recomputes.
-    candidates = materialize_once(candidates)
+    candidates = materialize(candidates)
     # only docs that appear in a candidate pair need their shingle
     # arrays built — at scale candidates are sparse vs the corpus
     cand_ids = (
@@ -292,7 +292,7 @@ def minhash_lsh_pairs(
     # stream is ~bands rows/doc of (id, int, hash) — shuffle-file cost
     # class — and checkpointing it once halves signature compute.
     sig = minhash_signatures(docs, id_col, text_col, n, k)
-    band_df = materialize_once(_banded_buckets(sig, id_col, bands, r))
+    band_df = materialize(_banded_buckets(sig, id_col, bands, r))
     a = band_df.select(F.col(id_col).alias("doc_a"), "band", "bucket")
     b = band_df.select(F.col(id_col).alias("doc_b"), "band", "bucket")
     return (
@@ -510,7 +510,7 @@ def fuzzy_decontaminate(
     # two semi-join prune legs plus the verify join, and an
     # unmaterialized plan would re-run signatures + the band join for
     # each leg
-    cands = materialize_once(
+    cands = materialize(
         doc_bands.join(bench_bands, ["band", "bucket"])
         .select(id_col, "_bench_id")
         .distinct()
@@ -589,7 +589,7 @@ def paragraph_dedup(
         .where(F.trim(para) != "")
         .select(F.col(id_col), "_pos", "_para", key.alias("_pkey"))
     )
-    paras = materialize_once(paras)
+    paras = materialize(paras)
     keepers = (
         paras.groupBy("_pkey")
         .agg(F.min(F.struct(F.col(id_col), F.col("_pos"))).alias("_k"))

@@ -18,7 +18,7 @@ Scale design:
   shuffle disappears). Out-degrees are folded into the persisted edge
   frame so each iteration is scan→join→partial-agg→union, nothing
   else.
-* Each iteration ends with ``localCheckpoint`` — lineage is cut
+* Each iteration ends with ``materialize`` — lineage is cut
   exactly like canonicalize.connected_components, so 20 iterations do
   not build a 20-deep physical lineage; the loop caches are released
   once the checkpointed result materializes.
@@ -35,6 +35,9 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+# module-qualified: triangle_count's ``materialize`` flag shadows the name
+from . import materialize as mat
 
 
 def named_graph_edges(
@@ -88,7 +91,6 @@ def pagerank(
     iterations: int = 3,
     damping: float = 0.85,
     partitions: int | None = None,
-    eager_checkpoint: bool = False,
     reset_nodes: DataFrame | None = None,
 ) -> DataFrame:
     """Fixed-iteration PageRank over a directed edge list.
@@ -109,11 +111,9 @@ def pagerank(
     The resident edge frame pays exactly ONE exchange: repartition on
     src, then out-degree via a whole-partition window (a local sort,
     no groupBy+join-back), persisted. Each iteration shuffles only the
-    rank frame onto that partitioning. localCheckpoint per iteration
-    cuts lineage; it is LAZY by default (checkpoints materialize
-    bottom-up on the first action — one job instead of one per
-    iteration). Set ``eager_checkpoint=True`` for very deep iteration
-    counts where logical-plan depth itself becomes a cost.
+    rank frame onto that partitioning. A LAZY checkpoint per
+    iteration cuts lineage (the checkpoints materialize bottom-up on
+    the first action — one job instead of one per iteration).
     """
     from pyspark.sql import Window
 
@@ -165,7 +165,7 @@ def pagerank(
             .groupBy("dst")
             .agg(F.sum("c").alias("_in"))
         )
-        ranks = (
+        ranks = mat.materialize(
             nodes.join(contribs.withColumnRenamed("dst", "node"), "node", "left")
             .select(
                 "node",
@@ -173,11 +173,10 @@ def pagerank(
                     F.lit(1.0 - damping) * F.col("_r")
                     + F.lit(damping) * F.coalesce(F.col("_in"), F.lit(0.0))
                 ).alias("rank"),
-            )
-            .localCheckpoint(eager=eager_checkpoint)
+            ),
+            eager=False,
         )
-    if not eager_checkpoint:
-        ranks.count()  # materialize the lazy checkpoint chain (one job)
+    ranks.count()  # materialize the lazy checkpoint chain (one job)
     # the result is checkpointed — release the loop caches instead of
     # pinning executor storage for the session lifetime
     e.unpersist()
@@ -228,11 +227,6 @@ def triples_to_edges(triples: DataFrame, *, preds: list[str] | None = None) -> D
     return e.select(F.col("subj").alias("src"), F.col("obj").alias("dst"))
 
 
-_CLOSURE_DRIVER_EDGE_MAX = 65_536  # edge count below which the closure
-# runs driver-side (the _schema_closure / connected_components hybrid
-# pattern: a ≤65k-edge relation is dimension-class — collecting it costs
-# the same as one broadcast, and the driver loop replaces the 2-jobs-
-# per-BFS-level frontier chain with one collect + one createDataFrame)
 _CLOSURE_DRIVER_PAIR_MAX = 4_000_000  # output guard: a pathological
 # small graph (one long chain) has a quadratic closure; past this many
 # pairs the driver loop abandons its work and the distributed frontier
@@ -296,18 +290,17 @@ def transitive_closure(
     OntologyCUIProcessor mapping stage / cascade J3; this is the
     general fixed-point twin).
 
-    Hybrid: an edge set up to ``driver_threshold`` (default 65k, the
-    _schema_closure / connected_components bound; pass 0 to disable)
-    closes in a driver-side BFS loop — one collect + one
-    createDataFrame instead of 2 Spark jobs per level — with an
-    output-size guard (≈4M pairs) that falls back to the distributed
-    loop for pathological quadratic closures. Larger edge sets go
-    straight to the frontier BFS below.
+    Hybrid: an edge set up to ``driver_threshold`` (default
+    ``materialize.DRIVER_ROWS_MAX``; pass 0 to disable) closes in a
+    driver-side BFS loop — one collect + one createDataFrame instead
+    of 2 Spark jobs per level — with an output-size guard (≈4M pairs)
+    that falls back to the distributed loop for pathological quadratic
+    closures. Larger edge sets go straight to the frontier BFS below.
 
     Frontier BFS over iterative self-joins: each level joins the
     previous frontier to the (cached, src-partitioned) edge relation,
     anti-joins already-seen pairs (so diamonds don't re-expand and the
-    first-seen depth is the minimum), and eagerly localCheckpoints to
+    first-seen depth is the minimum), and is eagerly materialized to
     cut lineage — the CC/pagerank scale shape. Every level ends with
     an O(1) isEmpty probe on the checkpointed frontier, so the loop
     stops at the graph's ACTUAL closure depth even when ``max_depth``
@@ -322,29 +315,22 @@ def transitive_closure(
         edges.sparkSession.conf.get("spark.sql.shuffle.partitions", "200")
     )
     raw = edges.select(F.col(src).alias("_mid"), F.col(dst).alias("dst"))
-    cap0 = max_depth if max_depth is not None else 1000
-    thresh = (
-        _CLOSURE_DRIVER_EDGE_MAX if driver_threshold is None else driver_threshold
+    cap = max_depth if max_depth is not None else 1000
+    rows = mat.collect_if_small(
+        raw, mat.DRIVER_ROWS_MAX if driver_threshold is None else driver_threshold
     )
-    if thresh:
-        sample = raw.limit(thresh + 1).collect()
-        if len(sample) <= thresh:
-            closed = _driver_transitive_closure(sample, cap0, max_depth)
-            if closed is not None:
-                from pyspark.sql.types import (
-                    IntegerType,
-                    StructField,
-                    StructType,
-                )
+    closed = None if rows is None else _driver_transitive_closure(rows, cap, max_depth)
+    if closed is not None:
+        from pyspark.sql.types import IntegerType, StructField, StructType
 
-                schema = StructType(
-                    [
-                        StructField("src", raw.schema[0].dataType, True),
-                        StructField("dst", raw.schema[1].dataType, True),
-                        StructField("depth", IntegerType(), False),
-                    ]
-                )
-                return edges.sparkSession.createDataFrame(closed, schema)
+        schema = StructType(
+            [
+                StructField("src", raw.schema[0].dataType, True),
+                StructField("dst", raw.schema[1].dataType, True),
+                StructField("depth", IntegerType(), False),
+            ]
+        )
+        return edges.sparkSession.createDataFrame(closed, schema)
     if partitions is not None:
         n_part = partitions
     else:
@@ -358,10 +344,8 @@ def transitive_closure(
         raw = raw.persist()
         n_part = max(1, min(conf_part, raw.count() // 65536 + 1))
     e = raw.repartition(n_part, "_mid").persist()
-    level = (
-        e.select(F.col("_mid").alias("src"), "dst")
-        .withColumn("depth", F.lit(1))
-        .localCheckpoint(eager=True)
+    level = mat.materialize(
+        e.select(F.col("_mid").alias("src"), "dst").withColumn("depth", F.lit(1))
     )
     if raw is not e and partitions is None:
         raw.unpersist()  # e is materialized by the level-1 checkpoint
@@ -369,16 +353,14 @@ def transitive_closure(
     # frames (each leaf already materialized) — re-checkpointing the
     # accumulated union every level would rewrite O(levels²) rows.
     paths, frontier, depth = level, level, 1
-    cap = max_depth if max_depth is not None else 1000
     while depth < cap:
-        nxt = (
+        nxt = mat.materialize(
             frontier.withColumnRenamed("dst", "_mid")
             .repartition(n_part, "_mid")
             .join(e, "_mid")
             .select("src", "dst", (F.col("depth") + 1).alias("depth"))
             .dropDuplicates(["src", "dst"])
             .join(paths, ["src", "dst"], "left_anti")
-            .localCheckpoint(eager=True)
         )
         if nxt.isEmpty():
             break
@@ -423,7 +405,7 @@ def triangle_count(
     neighbor gets 1) and partially aggregate — integer arithmetic, no
     FP order dependence.
 
-    ``materialize=True`` (default) eagerly localCheckpoints the
+    ``materialize=True`` (default) eagerly materializes the
     (per-node, small) result and releases the oriented-edge cache;
     pass False to get the lazy plan (plan inspection / custom
     pipelining) and manage the persisted frame yourself.
@@ -443,7 +425,7 @@ def triangle_count(
         # ~3 full evaluations on the bench fixture. Eager (lazy would
         # race: the consumers run inside one job and each would compute
         # the unpopulated cache).
-        und = und.localCheckpoint(eager=True)
+        und = mat.materialize(und)
     deg = (
         und.select(F.col("a").alias("node"))
         .unionByName(und.select(F.col("b").alias("node")))
@@ -521,7 +503,7 @@ def triangle_count(
         # sibling discipline (transitive_closure/bfs): materialize the
         # (small, per-node) result and release the oriented-edge cache
         # instead of pinning it for the session
-        result = result.localCheckpoint(eager=True)
+        result = mat.materialize(result)
         oriented.unpersist()
     return result
 
@@ -544,7 +526,7 @@ def bfs_distances(
     is repartitioned on src ONCE and persisted; each level joins the
     (small) frontier against it, anti-joins the visited set (so a node
     keeps its first — minimal — distance and diamonds don't re-expand),
-    and localCheckpoints to cut lineage. Depth-bounded: no driver
+    and is materialized to cut lineage. Depth-bounded: no driver
     fixpoint probe per level below ``max_depth``; an early-empty
     frontier short-circuits with one O(1) isEmpty probe per level.
     """
@@ -556,15 +538,14 @@ def bfs_distances(
         .repartition(n_part, "_from")
         .persist()
     )
-    visited = (
+    visited = mat.materialize(
         sources.select(F.col(sources.columns[0]).alias("node"))
         .distinct()
         .withColumn("dist", F.lit(0))
-        .localCheckpoint(eager=True)
     )
     frontier = visited
     for depth in range(1, max_depth + 1):
-        nxt = (
+        nxt = mat.materialize(
             frontier.withColumnRenamed("node", "_from")
             .repartition(n_part, "_from")
             .join(e, "_from")
@@ -572,11 +553,10 @@ def bfs_distances(
             .distinct()
             .join(visited, "node", "left_anti")
             .withColumn("dist", F.lit(depth))
-            .localCheckpoint(eager=True)
         )
         if nxt.isEmpty():
             break
-        visited = visited.unionByName(nxt).localCheckpoint(eager=True)
+        visited = mat.materialize(visited.unionByName(nxt))
         frontier = nxt
     e.unpersist()
     return visited
@@ -638,15 +618,15 @@ def label_propagation(
         .repartition(n_part, "_from")
         .persist()
     )
-    labels = (
+    labels = mat.materialize(
         und.select(F.col("node"))
         .unionByName(und.select(F.col("_from").alias("node")))
         .distinct()
         .withColumn("label", F.col("node"))
-        .localCheckpoint(eager=True)
     )
     for _ in range(iterations):
-        counted = (
+        # consumed twice (max-count + join back): materialize once
+        counted = mat.materialize(
             und.join(
                 labels.withColumnRenamed("node", "_from").repartition(
                     n_part, "_from"
@@ -655,9 +635,7 @@ def label_propagation(
             )
             .groupBy("node", "label")
             .agg(F.count(F.lit(1)).alias("_c"))
-            # consumed twice (max-count + join back): materialize once
-            .localCheckpoint(eager=True)
         )
-        labels = _argmax_label(counted).localCheckpoint(eager=True)
+        labels = mat.materialize(_argmax_label(counted))
     und.unpersist()
     return labels

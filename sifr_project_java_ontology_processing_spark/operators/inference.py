@@ -46,6 +46,7 @@ from pyspark.sql import functions as F
 
 from ..functions.uris import expand
 from .graph import transitive_closure
+from .materialize import DRIVER_ROWS_MAX, collect_if_small, materialize
 
 RDF_TYPE = expand("rdf:type")
 RDFS_SUBCLASSOF = expand("rdfs:subClassOf")
@@ -66,64 +67,28 @@ def _as_type_triple(subj_col, cls_col) -> list:
     ]
 
 
-_DRIVER_CLOSURE_MAX = 65_536  # schema edge count below which the
-# closure runs driver-side (same hybrid pattern as
-# canonicalize.connected_components' driver_threshold: a schema is a
-# DIMENSION — collecting it is the same cost class as broadcasting it,
-# and the driver loop replaces ~4 Spark jobs per BFS level)
-
-
 def _schema_closure(triples: DataFrame, pred_iri: str, *, max_depth: int) -> DataFrame:
     """Transitive closure of one schema predicate as (sub, sup) pairs
     (closure depth collapsed — consumers only need reachability).
-
-    Hybrid: schemas up to ``_DRIVER_CLOSURE_MAX`` edges close in a
-    driver-side frontier loop (output-bounded: each round extends the
-    known pair set by one hop, cycle-safe); a pathological larger
-    ontology falls back to the distributed frontier BFS."""
+    A schema is a DIMENSION, so ``transitive_closure`` closes it
+    driver-side; a pathological larger ontology takes its distributed
+    frontier BFS. Derived self-pairs (a, a) stay: a subClassOf cycle
+    A ⊑ B ⊑ A entails A ⊑ A. The input edges are distinct, so the
+    closure pairs are too."""
     edges = (
         triples.where((F.col("pred") == pred_iri) & ~F.col("obj_is_literal"))
         .select(F.col("subj").alias("src"), F.col("obj").alias("dst"))
         .where(F.col("src") != F.col("dst"))
         .distinct()
     )
-    sample = edges.limit(_DRIVER_CLOSURE_MAX + 1).collect()
-    if len(sample) <= _DRIVER_CLOSURE_MAX:
-        adj: dict[str, list[str]] = {}
-        for r in sample:
-            adj.setdefault(r["src"], []).append(r["dst"])
-        paths: set[tuple[str, str]] = {(r["src"], r["dst"]) for r in sample}
-        frontier = set(paths)
-        for _ in range(1, max_depth):
-            # derived self-pairs (a, a) stay: a subClassOf cycle
-            # A ⊑ B ⊑ A entails A ⊑ A, matching the distributed twin
-            new = {
-                (a, c)
-                for a, b in frontier
-                for c in adj.get(b, ())
-                if (a, c) not in paths
-            }
-            if not new:
-                break
-            paths |= new
-            frontier = new
-        spark = triples.sparkSession
-        if not paths:
-            return spark.createDataFrame([], "_sub string, _sup string")
-        return spark.createDataFrame(
-            sorted(paths), "_sub string, _sup string"
-        )
     closed = transitive_closure(edges, max_depth=max_depth, partitions=8)
-    return closed.select(
-        F.col("src").alias("_sub"), F.col("dst").alias("_sup")
-    ).distinct()
+    return closed.select(F.col("src").alias("_sub"), F.col("dst").alias("_sup"))
 
 
 def rdfs_entail(
     triples: DataFrame,
     *,
     max_schema_depth: int = 20,
-    materialize_strata: bool = True,
     _sp: DataFrame | None = None,
 ) -> DataFrame:
     """Materialize the RDFS consequences of ``triples`` and return the
@@ -171,32 +136,28 @@ def rdfs_entail(
             F.col("obj_is_literal"),
         )
     )
-    g1 = t.unionByName(derived7).unionByName(
-        _schema_triples(sp, RDFS_SUBPROPERTYOF)
+    # each stratum frame has SEVERAL consumers (the next stratum's
+    # union branch plus every rule join probing it) — a lazy
+    # checkpoint evaluates it once instead of re-deriving the whole
+    # subtree per consumer
+    g1 = materialize(
+        t.unionByName(derived7).unionByName(_schema_triples(sp, RDFS_SUBPROPERTYOF)),
+        eager=False,
     )
-    if materialize_strata:
-        # each stratum frame has SEVERAL consumers (the next stratum's
-        # union branch plus every rule join probing it) — a lazy
-        # checkpoint evaluates it once instead of re-deriving the
-        # whole subtree per consumer. At fact scale where
-        # materializing the stream is worse than re-scanning the
-        # (pushdown-pruned) source, pass materialize_strata=False.
-        g1 = g1.localCheckpoint(eager=False)
 
     # --- stratum 2: class hierarchy + domain/range -----------------------
     # ONE schema-dim-sized slice feeds the subClassOf closure AND the
     # domain/range dimensions: without it each build is its own full
     # scan of the (fact-scale) g1 stream — three passes where one
     # suffices (guide §2.3 "shuffle/scan fewer bytes"). The slice is a
-    # lazy localCheckpoint: the sc closure's collect materializes it,
+    # lazy checkpoint: the sc closure's collect materializes it,
     # dom/rng then read the tiny materialized frame.
-    schema_slice = (
+    schema_slice = materialize(
         g1.where(
             F.col("pred").isin(RDFS_SUBCLASSOF, RDFS_DOMAIN, RDFS_RANGE)
             & ~F.col("obj_is_literal")
-        )
-        .select(*_TRIPLE_COLS)
-        .localCheckpoint(eager=False)
+        ).select(*_TRIPLE_COLS),
+        eager=False,
     )
     sc = _schema_closure(schema_slice, RDFS_SUBCLASSOF, max_depth=max_schema_depth)
     dom = (
@@ -217,13 +178,12 @@ def rdfs_entail(
         .join(F.broadcast(rng), g1["pred"] == rng["_p"])
         .select(*_as_type_triple(F.col("obj"), F.col("_c")))
     )
-    g2 = (
+    g2 = materialize(
         g1.unionByName(derived2)
         .unionByName(derived3)
-        .unionByName(_schema_triples(sc, RDFS_SUBCLASSOF))
+        .unionByName(_schema_triples(sc, RDFS_SUBCLASSOF)),
+        eager=False,
     )
-    if materialize_strata:
-        g2 = g2.localCheckpoint(eager=False)
 
     # --- stratum 3: type inheritance (rdfs9) -----------------------------
     types = g2.where(F.col("pred") == RDF_TYPE)
@@ -375,7 +335,6 @@ def rdfs_plus_entail(
     *,
     max_schema_depth: int = 20,
     max_transitive_depth: int = 20,
-    materialize_strata: bool = True,
 ) -> DataFrame:
     """RDFS-Plus materialization: the full ``rdfs_entail`` rule set
     plus the three OWL property characteristics every production
@@ -452,20 +411,21 @@ def rdfs_plus_entail(
     # no distinct here: a desugared sub-axiom duplicating an asserted
     # one is collapsed by the final rdfs_entail distinct; a fact-scale
     # shuffle just to dedupe schema-sized additions would be waste
-    t = t.unionByName(_eq_to_sub(OWL_EQCLASS, RDFS_SUBCLASSOF)).unionByName(
-        _eq_to_sub(OWL_EQPROP, RDFS_SUBPROPERTYOF)
+    # t is evaluated by the subPropertyOf closure probe AND again when
+    # g1 materializes; when the input arrives as a live plan
+    # (joins/unions upstream) each evaluation re-runs it. One lazy
+    # checkpoint; the g1 checkpoint below then copies from it.
+    t = materialize(
+        t.unionByName(_eq_to_sub(OWL_EQCLASS, RDFS_SUBCLASSOF)).unionByName(
+            _eq_to_sub(OWL_EQPROP, RDFS_SUBPROPERTYOF)
+        ),
+        eager=False,
     )
-    if materialize_strata:
-        # t is evaluated by the subPropertyOf closure probe AND again
-        # when g1 materializes; when the input arrives as a live plan
-        # (joins/unions upstream) each evaluation re-runs it. One lazy
-        # checkpoint; the g1 checkpoint below then copies from it.
-        t = t.localCheckpoint(eager=False)
 
     # stratum 1: property hierarchy (reuse rdfs_entail's rules later;
     # here we only need the generalized assertions for owl expansion)
-    sp = _schema_closure(t, RDFS_SUBPROPERTYOF, max_depth=max_schema_depth)
-    sp = sp.localCheckpoint(eager=True)  # shared with the inner rdfs_entail
+    # shared with the inner rdfs_entail
+    sp = materialize(_schema_closure(t, RDFS_SUBPROPERTYOF, max_depth=max_schema_depth))
     derived7 = t.join(F.broadcast(sp), t["pred"] == sp["_sub"]).select(
         F.col("subj"),
         F.col("_sup").alias("pred"),
@@ -473,31 +433,26 @@ def rdfs_plus_entail(
         F.col("obj_lang"),  # object term verbatim, lang tag included
         F.col("obj_is_literal"),
     )
-    g1 = t.unionByName(derived7)
-    if materialize_strata:
-        # g1 has MANY consumers below (the property-dimension slice,
-        # both expansion passes, the transitive-edge extraction, and
-        # the inner rdfs_entail) — without a checkpoint each broadcast
-        # build and closure probe re-evaluates the full input stream
-        # (~10 evaluations measured on the bench fixture). Same
-        # tradeoff knob as rdfs_entail's materialize_strata.
-        g1 = g1.localCheckpoint(eager=False)
+    # g1 has MANY consumers below (the property-dimension slice, both
+    # expansion passes, the transitive-edge extraction, and the inner
+    # rdfs_entail) — without a checkpoint each broadcast build and
+    # closure probe re-evaluates the full input stream (~10 evaluations
+    # measured on the bench fixture)
+    g1 = materialize(t.unionByName(derived7), eager=False)
 
     # stratum 2: inverse + symmetric expansion (IRI objects only).
     # The three property dimensions (inverseOf pairs, Symmetric,
     # Transitive) come from ONE schema-dim-sized slice of g1 so the
     # stream is scanned once for all of them, and the eager checkpoint
     # pins the tiny slice for its five broadcast consumers.
-    prop_slice = (
+    prop_slice = materialize(
         g1.where(
             ((F.col("pred") == OWL_INVERSEOF) & ~F.col("obj_is_literal"))
             | (
                 (F.col("pred") == RDF_TYPE)
                 & F.col("obj").isin(OWL_SYMMETRIC, OWL_TRANSITIVE)
             )
-        )
-        .select("subj", "pred", "obj")
-        .localCheckpoint(eager=True)
+        ).select("subj", "pred", "obj")
     )
     inv = (
         prop_slice.where(F.col("pred") == OWL_INVERSEOF)
@@ -516,12 +471,10 @@ def rdfs_plus_entail(
     def _inv_sym_expand(g: DataFrame) -> DataFrame:
         return _expand_inv_sym(g, inv_both, sym)
 
-    g2 = _inv_sym_expand(g1)
-    if materialize_strata:
-        # g2 is read by the transitive-edge extraction AND three times
-        # by the g3 expansion (x ∪ inv(x) ∪ sym(x) references x per
-        # branch) — checkpoint once instead of four evaluations
-        g2 = g2.localCheckpoint(eager=False)
+    # g2 is read by the transitive-edge extraction AND three times by
+    # the g3 expansion (x ∪ inv(x) ∪ sym(x) references x per branch) —
+    # checkpoint once instead of four evaluations
+    g2 = materialize(_inv_sym_expand(g1), eager=False)
 
     # stratum 3: pooled transitive closure over every TransitiveProperty
     # (from g2, as before — an inverse/symmetric mirror can in principle
@@ -562,18 +515,12 @@ def rdfs_plus_entail(
     # (the inner rdfs7 pass is still needed — inverse/transitive-derived
     # assertions must be generalized too — but it reuses the checkpointed
     # subPropertyOf closure instead of re-running the closure job chain)
-    out = rdfs_entail(
-        g3,
-        max_schema_depth=max_schema_depth,
-        materialize_strata=materialize_strata,
-        _sp=sp,
+    # `out` feeds BOTH the stratum-5 schema slice and the final union:
+    # un-checkpointed, the whole entailed stream evaluates twice; one
+    # lazy checkpoint halves that.
+    out = materialize(
+        rdfs_entail(g3, max_schema_depth=max_schema_depth, _sp=sp), eager=False
     )
-    if materialize_strata:
-        # `out` feeds BOTH the stratum-5 schema slice and the final
-        # union: un-checkpointed, the whole entailed stream evaluates
-        # twice (the docstring's former "two fact-stream evaluations");
-        # one lazy checkpoint halves that.
-        out = out.localCheckpoint(eager=False)
 
     # stratum 5: re-derive closed equivalences from mutual subsumption
     # (scm-eqc2 / scm-eqp2) — this is how ≡'s own symmetry and
@@ -585,7 +532,7 @@ def rdfs_plus_entail(
     # union — two fact-stream evaluations total, not five). LAZY
     # checkpoint (same as rdfs_entail's strata): materializes bottom-up
     # on the first action, so building this plan stays job-free.
-    schema_slice = (
+    schema_slice = materialize(
         out.where(
             F.col("pred").isin(
                 RDFS_SUBCLASSOF, RDFS_SUBPROPERTYOF, OWL_EQCLASS, OWL_EQPROP
@@ -593,8 +540,8 @@ def rdfs_plus_entail(
             & ~F.col("obj_is_literal")
         )
         .select("subj", "pred", "obj")
-        .repartition(4)
-        .localCheckpoint(eager=False)
+        .repartition(4),
+        eager=False,
     )
 
     def _mutual(sub_pred: str, eq_pred: str) -> DataFrame:
@@ -733,19 +680,17 @@ def rdfs_entail_delta(
     d = delta.select(*_TRIPLE_COLS)
     e = entailed.select(*_TRIPLE_COLS)
     if materialize_entailed:
-        e = e.localCheckpoint(eager=False)
+        e = materialize(e, eager=False)
     # one pinned schema slice for the four saturated views (see
     # rdfs_plus_entail_delta) instead of four full scans of the old
     # graph; materializes the lazy e-checkpoint as a side effect
-    e_schema = (
+    e_schema = materialize(
         e.where(
             F.col("pred").isin(
                 RDFS_SUBPROPERTYOF, RDFS_SUBCLASSOF, RDFS_DOMAIN, RDFS_RANGE
             )
             & ~F.col("obj_is_literal")
-        )
-        .select(*_TRIPLE_COLS)
-        .localCheckpoint(eager=True)
+        ).select(*_TRIPLE_COLS)
     )
     sp, sc, dom, rng = saturated_schema_views(e_schema)
     # a delta triple is schema-bearing if its predicate IS a schema
@@ -768,7 +713,7 @@ def rdfs_entail_delta(
     # tree references its input ~12× (see rdfs_plus_entail_delta) —
     # one delta-sized copy beats a dozen re-evaluations of the live
     # delta plan
-    d = d.localCheckpoint(eager=False)
+    d = materialize(d, eager=False)
     fresh = apply_rules_to_delta(d, sp, sc, dom, rng).distinct()
 
     # null-safe anti-join: keep only genuinely new triples, then append
@@ -820,8 +765,8 @@ def rdfs_plus_entail_delta(
     delta → full ``rdfs_plus_entail`` over the union (idempotent,
     always correct).
 
-    ``materialize_entailed`` (default True) lazily localCheckpoints
-    the old graph once: this function reads it ~8 times (schema views,
+    ``materialize_entailed`` (default True) lazily materializes the
+    old graph once: this function reads it ~8 times (schema views,
     property dimensions, the two closure-bridge slices, the final
     anti-join + union), and when ``entailed`` arrives as a LIVE plan
     (the common test/pipeline composition) every read would otherwise
@@ -832,13 +777,13 @@ def rdfs_plus_entail_delta(
     d = delta.select(*_TRIPLE_COLS)
     e = entailed.select(*_TRIPLE_COLS)
     if materialize_entailed:
-        e = e.localCheckpoint(eager=False)
+        e = materialize(e, eager=False)
     # ONE schema-dim-sized slice of the saturated graph feeds all seven
     # dimension builds below (sp/sc/dom/rng views + inv/sym/trans) —
     # without it each build is its own full scan of the old graph. The
     # eager checkpoint also forces the lazy e-checkpoint to materialize
     # here, so every later job reads stored blocks.
-    e_schema = (
+    e_schema = materialize(
         e.where(
             F.col("pred").isin(
                 RDFS_SUBPROPERTYOF,
@@ -851,9 +796,7 @@ def rdfs_plus_entail_delta(
                 (F.col("pred") == RDF_TYPE)
                 & F.col("obj").isin(OWL_SYMMETRIC, OWL_TRANSITIVE)
             )
-        )
-        .select(*_TRIPLE_COLS)
-        .localCheckpoint(eager=True)
+        ).select(*_TRIPLE_COLS)
     )
     sp, sc, dom, rng = saturated_schema_views(e_schema)
     meta_preds = sp.where(
@@ -930,7 +873,7 @@ def rdfs_plus_entail_delta(
             .distinct()
         )
 
-    d_edges = _fused(n2).localCheckpoint(eager=True)  # small: delta-sized
+    d_edges = materialize(_fused(n2))  # small: delta-sized
     e_pairs = _fused(e)  # old closure pairs (C), pred-filtered slice
     # C? ∘ Δ : extend each new edge backwards through the old closure
     pre = d_edges.unionByName(
@@ -944,7 +887,7 @@ def rdfs_plus_entail_delta(
         ).select("src", F.col("_b").alias("dst"))
     )
     # (C? ∘ Δ) ∘ C? : and forwards
-    bridged = (
+    bridged = materialize(
         pre.unionByName(
             pre.select(F.col("src"), F.col("dst").alias("_mid")).join(
                 e_pairs.select(
@@ -952,9 +895,7 @@ def rdfs_plus_entail_delta(
                 ),
                 "_mid",
             ).select("src", F.col("_b").alias("dst"))
-        )
-        .distinct()
-        .localCheckpoint(eager=True)
+        ).distinct()
     )
     closed = transitive_closure(bridged, max_depth=max_transitive_depth)
     derived_trans = closed.select(
@@ -973,9 +914,9 @@ def rdfs_plus_entail_delta(
     # checkpoint every reference re-runs the delta bridging joins. The
     # frame is delta-sized, so the copy is the cheap side of that trade
     # at any scale.
-    n3 = _expand_inv_sym(
-        n2.unionByName(derived_trans), inv_both, sym
-    ).localCheckpoint(eager=False)
+    n3 = materialize(
+        _expand_inv_sym(n2.unionByName(derived_trans), inv_both, sym), eager=False
+    )
     fresh = apply_rules_to_delta(n3, sp, sc, dom, rng).distinct()
 
     cond = None
@@ -1064,11 +1005,11 @@ def _collect_rdf_lists(
     ``(s, [(obj, lang, is_lit), ...])`` — the RDF list
     (rdf:first/rdf:rest chains, which both the Turtle ``( )`` and
     RDF/XML parseType=Collection readers emit) is walked DRIVER-side:
-    axioms are a schema dimension (same stance as _schema_closure's
-    driver path). Malformed lists (missing first/rest, FORKED nodes
+    axioms are a schema dimension (same stance as _schema_closure).
+    Malformed lists (missing first/rest, FORKED nodes
     with duplicate first/rest arcs, cycles) raise rather than silently
     shortening or nondeterministically reordering members. The
-    list-cell collect is capped at ``_DRIVER_CLOSURE_MAX`` rows: a
+    list-cell collect is capped at ``DRIVER_ROWS_MAX`` rows: a
     graph whose INSTANCE data carries millions of RDF collections
     (OWL class expressions, SKOS ordered collections) must pass the
     axioms explicitly rather than OOM the driver. ``rdf:first``
@@ -1080,18 +1021,16 @@ def _collect_rdf_lists(
     ).select("subj", "obj").collect()
     if not axioms:
         return []
-    cell_rows = (
+    cell_rows = collect_if_small(
         t.where(
             (F.col("pred") == _RDF_FIRST)
             | ((F.col("pred") == _RDF_REST) & ~F.col("obj_is_literal"))
-        )
-        .select("subj", "pred", "obj", "obj_lang", "obj_is_literal")
-        .limit(_DRIVER_CLOSURE_MAX + 1)
-        .collect()
+        ).select("subj", "pred", "obj", "obj_lang", "obj_is_literal"),
+        DRIVER_ROWS_MAX,
     )
-    if len(cell_rows) > _DRIVER_CLOSURE_MAX:
+    if cell_rows is None:
         raise ValueError(
-            f"graph carries > {_DRIVER_CLOSURE_MAX} rdf:first/rdf:rest "
+            f"graph carries > {DRIVER_ROWS_MAX} rdf:first/rdf:rest "
             f"cells — extract the {label} axioms from the schema graph "
             "and pass them explicitly instead of walking instance-data "
             "collections driver-side"
@@ -1224,13 +1163,15 @@ def apply_property_chains(
         # chain-output predicate cannot suppress a genuinely new
         # derived IRI triple with the same lexical object (derived
         # rows are always is_literal=false, lang null).
-        new = new.join(
-            g.where(F.col("pred").isin([r for r, _ in chains])).select(
-                "subj", "pred", "obj", "obj_is_literal"
-            ),
-            ["subj", "pred", "obj", "obj_is_literal"],
-            "left_anti",
-        ).localCheckpoint(eager=True)
+        new = materialize(
+            new.join(
+                g.where(F.col("pred").isin([r for r, _ in chains])).select(
+                    "subj", "pred", "obj", "obj_is_literal"
+                ),
+                ["subj", "pred", "obj", "obj_is_literal"],
+                "left_anti",
+            )
+        )
         if new.isEmpty():
             converged = True
             break
@@ -1500,7 +1441,7 @@ def restrictions_entail(
         .select(F.col("subj").alias("_c"), F.col("obj").alias("_p"))
         .distinct()
     )
-    hv_dim = (
+    hv_dim = materialize(
         t.where(F.col("pred") == OWL_HASVALUE)
         .select(
             F.col("subj").alias("_c"),
@@ -1510,21 +1451,18 @@ def restrictions_entail(
         )
         .distinct()
         .join(onprop, "_c")
-        .localCheckpoint(eager=True)
     )
-    svf_dim = (
+    svf_dim = materialize(
         t.where((F.col("pred") == OWL_SOMEVALUES) & ~F.col("obj_is_literal"))
         .select(F.col("subj").alias("_c"), F.col("obj").alias("_d"))
         .distinct()
         .join(onprop, "_c")
-        .localCheckpoint(eager=True)
     )
-    avf_dim = (
+    avf_dim = materialize(
         t.where((F.col("pred") == OWL_ALLVALUES) & ~F.col("obj_is_literal"))
         .select(F.col("subj").alias("_c"), F.col("obj").alias("_d"))
         .distinct()
         .join(onprop, "_c")
-        .localCheckpoint(eager=True)
     )
     # single emptiness probe per dimension (reused below — the previous
     # shape probed each checkpointed dim twice, 6 jobs where 3 suffice)
@@ -1638,14 +1576,14 @@ def restrictions_entail(
             new = new.unionByName(d)
         return new
 
-    facts = t.localCheckpoint(eager=True)
+    facts = materialize(t)
     delta, first = facts, True
     for _ in range(max_rounds):
         new = _derive(delta, facts, first)
         first = False
         if new is None:
             break
-        new = (
+        new = materialize(
             new.distinct()
             .withColumn("_k", _row_key())
             .join(
@@ -1654,7 +1592,6 @@ def restrictions_entail(
                 "left_anti",
             )
             .drop("_k")
-            .localCheckpoint(eager=True)
         )
         if new.isEmpty():
             break
@@ -1907,14 +1844,13 @@ def class_expressions_entail(
             new = new.unionByName(d)
         return new
 
-    facts = t.localCheckpoint(eager=True)
+    facts = materialize(t)
     if static_rows:
-        new0 = (
+        new0 = materialize(
             spark.createDataFrame(sorted(set(static_rows)), sch)
             .withColumn("_k", _row_key())
             .join(facts.select(_row_key().alias("_k")), "_k", "left_anti")
             .drop("_k")
-            .localCheckpoint(eager=True)
         )
         if not new0.isEmpty():
             facts = facts.unionByName(new0)
@@ -1923,12 +1859,11 @@ def class_expressions_entail(
         new = _derive(delta, facts)
         if new is None:
             break
-        new = (
+        new = materialize(
             new.distinct()
             .withColumn("_k", _row_key())
             .join(facts.select(_row_key().alias("_k")), "_k", "left_anti")
             .drop("_k")
-            .localCheckpoint(eager=True)
         )
         if new.isEmpty():
             break

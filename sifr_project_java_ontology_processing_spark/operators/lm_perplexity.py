@@ -47,6 +47,8 @@ from dataclasses import dataclass
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from .materialize import materialize
+
 BOS = "<s>"
 EOS = "</s>"
 
@@ -108,18 +110,14 @@ def train_word_lm(
     distinct tok over the count table — so both derive from the
     dimension-sized model frame instead of re-scanning the corpus
     (guide §2.3: aggregate before you shuffle/scan again). The MODEL
-    frames (the trained artifact) are materialized with eager
-    localCheckpoints, so training several models (the per-language
-    CCNet shape) never accumulates reference-corpus-sized caches."""
+    frames (the trained artifact) are materialized eagerly, so training
+    several models (the per-language CCNet shape) never accumulates
+    reference-corpus-sized caches."""
     pairs = corpus.select(
         F.explode(_bigram_pairs(F.col(text_col))).alias("p")
     ).select("p.ctx", "p.tok")
-    bigrams = pairs.groupBy("ctx", "tok").agg(
-        F.count("*").alias("c")
-    ).localCheckpoint(eager=True)
-    contexts = bigrams.groupBy("ctx").agg(
-        F.sum("c").alias("cc")
-    ).localCheckpoint(eager=True)
+    bigrams = materialize(pairs.groupBy("ctx", "tok").agg(F.count("*").alias("c")))
+    contexts = materialize(bigrams.groupBy("ctx").agg(F.sum("c").alias("cc")))
     vocab_size = bigrams.select("tok").distinct().count()
     return WordBigramLM(
         bigrams=bigrams, contexts=contexts,

@@ -311,7 +311,7 @@ def detect_mentions_joined(
          carries IRIs and full phrases), so it broadcasts even when
          the dim cannot; tokens outside the vocab — the overwhelming
          majority of a web corpus — never enter a shuffle. The pruned
-         stream is materialized ONCE (eager localCheckpoint) so its
+         stream is materialized ONCE (eager ``materialize``) so its
          two consumers cannot re-run the scan→tokenize pipeline;
       4. an equi-join on ``tok == first_token`` yields candidate starts
          (AQE skew-join splits hot first tokens);
@@ -438,16 +438,16 @@ def detect_mentions_joined(
     # extraction when the input is an unmaterialized DAG — because
     # Spark's exchange reuse does not dedupe these subtrees (divergent
     # column pruning defeats plan canonicalization; verified
-    # empirically). An EAGER localCheckpoint computes the pruned
+    # empirically). An EAGER ``materialize`` computes the pruned
     # stream exactly once and truncates the lineage; both consumers
     # then read the stored blocks. Storage cost is the
     # vocabulary-occurrence fraction of the corpus token stream — the
     # same cost class as the shuffle this operator already pays.
     from sifr_project_java_ontology_processing_spark.operators.materialize import (
-        materialize_once,
+        materialize,
     )
 
-    tokens_kept = materialize_once(pruned)
+    tokens_kept = materialize(pruned)
     candidates = tokens_kept.join(
         phrases.withColumnRenamed("first_token", "tok"), "tok"
     ).select("url", "idx", "phrase_key", "n_tokens", "concept_iri", "label_kind")

@@ -83,9 +83,3 @@ def graph_diff(
     added = anti(n, o).withColumn("change", F.lit("added"))
     removed = anti(o, n).withColumn("change", F.lit("removed"))
     return added.unionByName(removed).distinct()
-
-
-def graph_diff_summary(diff: DataFrame) -> DataFrame:
-    """(pred, change, n) rollup of a ``graph_diff`` — the reviewable
-    release report. One partial-agg pass."""
-    return diff.groupBy("pred", "change").agg(F.count(F.lit(1)).alias("n"))

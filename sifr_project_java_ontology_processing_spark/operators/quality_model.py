@@ -110,10 +110,10 @@ def train_quality_weights(
     # scoring job broadcasts a tiny computed table instead of re-running
     # the training aggregation — and its corpus scans — per reference
     from sifr_project_java_ontology_processing_spark.operators.materialize import (
-        materialize_once,
+        materialize,
     )
 
-    return materialize_once(weights), bias
+    return materialize(weights), bias
 
 
 def score_quality_model(

@@ -192,10 +192,10 @@ def pack_sequences(
     # (totals + final): lineage recomputation may re-sample range
     # boundaries, silently corrupting offsets
     from sifr_project_java_ontology_processing_spark.operators.materialize import (
-        materialize_once,
+        materialize,
     )
 
-    src = materialize_once(src)
+    src = materialize(src)
     totals = src.groupBy("_pid").agg(F.sum("n_tok").alias("_t")).collect()
     running, offsets = 0, {}
     for row in sorted(totals, key=lambda r: r["_pid"]):

@@ -27,6 +27,8 @@ import math
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from .materialize import materialize
+
 
 def dot(a, b) -> F.Column:
     return F.aggregate(
@@ -565,11 +567,13 @@ def semantic_dedup(
 
     cmat = np.asarray(codebook, dtype=np.float64)
     cell_udf = _cell_assign_udf(cmat)
-    assign = embeddings.select(
-        F.col(id_col).alias("_id"),
-        F.col(vec_col).alias("_v"),
-        cell_udf(F.col(vec_col)).alias("cell"),
-    ).localCheckpoint(eager=True)  # consumed 4x: sizes, both sides, output
+    assign = materialize(  # consumed 4x: sizes, both sides, output
+        embeddings.select(
+            F.col(id_col).alias("_id"),
+            F.col(vec_col).alias("_v"),
+            cell_udf(F.col(vec_col)).alias("cell"),
+        )
+    )
     # per-cell block counts: the cell universe is the CODEBOOK (k rows),
     # so this dimension always broadcasts
     nblocks = F.broadcast(

@@ -135,6 +135,8 @@ from dataclasses import dataclass, field
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ..operators.materialize import materialize
+
 RDF_TYPE = "http://www.w3.org/1999/02/22-rdf-syntax-ns#type"
 _XSD_STRING = "http://www.w3.org/2001/XMLSchema#string"
 _RDF_LANGSTRING = "http://www.w3.org/1999/02/22-rdf-syntax-ns#langString"
@@ -1633,7 +1635,7 @@ def _closure_frame(
 ) -> tuple[DataFrame, set[str]]:
     """One closure pattern: reachability over the single-predicate
     edge relation via operators/graph.py::transitive_closure (frontier
-    BFS with per-level anti-join + localCheckpoint — the scale shape
+    BFS with per-level anti-join + checkpoint — the scale shape
     that survives deep hierarchies). '*' unions the zero-length
     identity over every term of the graph, per SPARQL. Endpoints
     compare on the lexical form.
@@ -1892,9 +1894,9 @@ def _compat_negation_join(
     # ReuseExchange cannot dedup them (verified: 0 ReusedExchange in
     # the split plan) — without pinning, the full upstream join tree
     # would re-execute once per subset (2^k times). One lazy
-    # localCheckpoint each materializes them exactly once on first use.
-    acc = acc.localCheckpoint(eager=False)
-    idf = idf.localCheckpoint(eager=False)
+    # checkpoint each materializes them exactly once on first use.
+    acc = materialize(acc, eager=False)
+    idf = materialize(idf, eager=False)
     solid = [v for v in shared if v not in nullable]
     parts: list[DataFrame] = []
     for mask in range(1 << len(nullable)):

@@ -141,21 +141,21 @@ def run_kg_pipeline(
 
     def dim_stage(name: str, thunk) -> DataFrame:
         """Dimension-sized stage: with a store it materializes like any
-        stage; without one it is cached EAGERLY (localCheckpoint) —
+        stage; without one it is cached EAGERLY (``materialize``) —
         triple assembly references the cascade 3× and the canonical
         dictionary 4×, and re-running the whole dim DAG (a dozen
         broadcast builds + the CC fixpoint) per branch is pure fixed
         cost that caps N→4N scaling efficiency (BENCH/BASELINE.md:
         ~9.6 s constant regardless of core count). A lazy persist is
         not enough: the union's branches run concurrently inside one
-        job and each computes the unpopulated cache. localCheckpoint
+        job and each computes the unpopulated cache. The checkpoint
         also CUTS THE LINEAGE, so the triple job's plan contains the
         tiny materialized table instead of the dim DAG replicated per
         branch."""
         if store is not None:
             return stage(name, thunk)
         from sifr_project_java_ontology_processing_spark.operators.materialize import (
-            materialize_once,
+            materialize,
         )
 
         # dimension tables are broadcast downstream by contract, i.e.
@@ -166,7 +166,7 @@ def run_kg_pipeline(
         # coalesce: upstream agg/join stages stay wide) to a handful
         # of blocks before the checkpoint; measured 3.9 s → 2.2 s for
         # the dim phase at 8 lanes.
-        return materialize_once(thunk().repartition(4))
+        return materialize(thunk().repartition(4))
 
     # label-dim signature: committed alongside the snapshots so a later
     # incremental run can detect dimension drift (see

@@ -8,6 +8,8 @@ from __future__ import annotations
 import os
 import re
 
+import pytest
+
 from sifr_project_java_ontology_processing_spark.session import _default_driver_mem
 
 
@@ -37,9 +39,37 @@ def test_local_scales_with_thread_count():
     want = min(max(8, -(-(os.cpu_count() or 8) * 3 // 4)), cap)
     assert _gb(_default_driver_mem("local[*]")) == want
     assert _gb(_default_driver_mem("local")) == want
-    # retry-count suffix form
+    # retry-count form local[N,F] (N threads, F task failures)
     assert _gb(_default_driver_mem("local[4,2]")) == 8
 
 
 def test_capped_at_half_physical_ram():
     assert _gb(_default_driver_mem("local[100000]")) == _phys_cap_gb()
+
+
+def _fake_sysconf(total_bytes: int):
+    def sysconf(name):
+        return {"SC_PHYS_PAGES": total_bytes // 4096, "SC_PAGE_SIZE": 4096}[name]
+
+    return sysconf
+
+
+def test_retry_form_master_scales_like_plain_local(monkeypatch):
+    # 128 GiB of RAM lifts the cap above 24g, so the scaled value differs
+    # from the 8g a non-matching master falls back to
+    monkeypatch.setattr(os, "sysconf", _fake_sysconf(128 * 2**30))
+    assert _default_driver_mem("local[32,2]") == "24g"
+    assert _default_driver_mem("local[32]") == "24g"
+    assert _default_driver_mem("local[64,3]") == "48g"
+
+
+@pytest.mark.parametrize("err", [ValueError, OSError, AttributeError])
+def test_failing_sysconf_skips_only_the_ram_cap(monkeypatch, err):
+    def sysconf(name):
+        raise err(name)
+
+    monkeypatch.setattr(os, "sysconf", sysconf)
+    assert _default_driver_mem("local[32]") == "24g"
+    assert _default_driver_mem("local[32,2]") == "24g"
+    assert _default_driver_mem("local[4]") == "8g"
+    assert _default_driver_mem("yarn") == "8g"
